@@ -142,9 +142,13 @@ def connected_components(
     `edges` come back as singleton clusters (cluster_id = row_id).
     on_iteration: optional callback(iteration:int, edge_count:int) — used by
     the pipeline to checkpoint the frontier (resume support).
-    assume_distinct: skip the initial dedup shuffle when the caller already
-    guarantees distinct (src != dst) edges (the ER pipeline does — it
-    distincts the union of near-dup and exact-dup edges itself).
+    assume_distinct: skip the initial dedup shuffle when the caller
+    guarantees no (src, dst) row repeats. The ER pipeline's edges are
+    distinct by construction: near-dup pairs are unique through
+    candidate_pairs' (id_l, id_r) groupBy, exact-dup edges are one
+    (rep -> row) per non-representative row, and the two sets are
+    disjoint because non-representatives never enter candidate pairs.
+    Self-loops and edges with a null endpoint are dropped either way.
     driver_max_edges: graphs at or under this many (distinct) edges are
     finished by one bounded driver union-find (identical labels — see
     _driver_cc); larger graphs run the star loop. 0 forces the loop.
@@ -158,9 +162,11 @@ def connected_components(
     prev_cp = conf.get("spark.sql.constraintPropagation.enabled", "true")
     conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
-        e = edges.select("src", "dst")
+        # `!=` is null for a null endpoint, so the filter drops those edges
+        # on both the driver and the star-loop path
+        e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
         if not assume_distinct:
-            e = e.filter(F.col("src") != F.col("dst")).distinct()
+            e = e.distinct()
         # lazy localCheckpoint + signature collect = ONE job per iteration:
         # the signature action materializes the checkpoint as a side effect
         # (eager=True would spend a separate job per iteration just to

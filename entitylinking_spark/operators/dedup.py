@@ -8,9 +8,11 @@ DataFrame of (doc_id, keep/cluster info) or duplicate pairs:
   simhash        64-bit fingerprint, hamming <= radius within buckets
   ngram_jaccard  exact token n-gram Jaccard within cheap blocks
   embedding      cosine near-dup over an embedding column
+  semdedup       k-means cells + within-cell cosine pruning
 
 The blocking/threshold mechanics intentionally reuse the ER operators —
-dedup IS entity resolution where the entity is "the document".
+dedup IS entity resolution where the entity is "the document". The two
+vector operators score their blocks with `vecblock.blocked_pairs`.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from entitylinking_spark.functions.hashing import (
     minhash_similarity,
 )
 from entitylinking_spark.functions.strings import exact_jaccard, ngram_hash_set, ngram_set
-from entitylinking_spark.operators.blocking import ERConfig
+from entitylinking_spark.operators.blocking import ERConfig, block_census
 from entitylinking_spark.operators.cc import connected_components
 from entitylinking_spark.operators.pairs import candidate_pairs
 
@@ -283,12 +285,12 @@ def embedding_near_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
                              dim: int | None = None,
                              corpus_count: int | None = None,
                              skip_block_threshold: int | None = None,
-                             kernel: str = "native",
                              metrics=None) -> DataFrame:
-    """Embedding-cosine near-dup pairs, LSH-bucketed by random-hyperplane
-    sign bits. The bucket self-join goes through `candidate_pairs` so a
-    skewed bucket (e.g. near-zero vectors all hashing alike) is
-    triangle-salted instead of exploding one task (round-1 verdict).
+    """Embedding-cosine near-dup pairs (id_l, id_r, cosine), LSH-bucketed
+    by random-hyperplane sign bits. Every bucket is scored by the grouped
+    kernel `vecblock.blocked_pairs`, which triangle-salts a skewed bucket
+    (e.g. near-zero vectors all hashing alike) instead of exploding one
+    task (round-1 verdict).
 
     Round 4: buckets use the integer-quantized SRP planes (the ann_topk
     machinery) so the candidate set is exact int64 arithmetic a DuckDB
@@ -312,10 +314,10 @@ def embedding_near_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     """
     from entitylinking_spark.operators.similarity import (
         auto_n_planes,
-        cosine_sim,
         make_srp_bucket_udf,
         srp_planes,
     )
+    from entitylinking_spark.operators.vecblock import blocked_pairs
 
     if dim is None:
         row = embeddings.select(F.col(vec_col)).first()
@@ -334,19 +336,12 @@ def embedding_near_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     d = embeddings.select(
         F.col(id_col).cast("string").alias("row_id"), F.col(vec_col).alias("vec")
     ).withColumn("block_key", bucket_udf(F.col("vec")).cast("string"))
-    cfg = ERConfig(block_cap=block_cap, skip_block_threshold=skip_block_threshold)
-    # materialize the slim (block_key, row_id) frame ONCE: candidate_pairs
-    # references it from the census + small + hot branches, and unpersisted
-    # Catalyst duplicates the ArrowEvalPython bucket kernel into every
-    # branch (8 copies in the executed plan — the same round-1 pattern
-    # dedup_minhash_lsh fixed with persist). The vector side (vl/vr) never
-    # needs the UDF: column pruning drops block_key from those scans.
+    # materialize the slim (block_key, row_id) frame ONCE: the census and
+    # the kernel both read it, and unpersisted Catalyst duplicates the
+    # ArrowEvalPython bucket kernel into every branch (the round-1 pattern
+    # dedup_minhash_lsh fixed with persist). The vector side never needs
+    # the UDF: column pruning drops block_key from that scan.
     blocks = d.select("block_key", "row_id").localCheckpoint(eager=True)
-    from entitylinking_spark.operators.blocking import block_census
-    from entitylinking_spark.operators.similarity import norm
-
-    # the census now always runs (it decides the small/hot split below);
-    # it is block-count sized, so the checkpoint is one tiny job
     census = block_census(blocks).localCheckpoint(eager=True)
     if metrics is not None:
         metrics.record(
@@ -354,178 +349,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
             skip_block_threshold=skip_block_threshold,
             **metrics.block_stats(census, block_cap, skip_block_threshold),
         )
-    if kernel not in ("native", "arrow"):
-        raise ValueError(f"unknown kernel {kernel!r}")
-    base = d.select("row_id", "vec")
-    # Round 6 (guide §2.3/§4.2): buckets that fit one task (size <=
-    # block_cap — the overwhelmingly common case under auto-sized planes)
-    # are scored as ONE grouped numpy kernel per bucket; no pair rows, no
-    # per-pair vector joins, no (id_l, id_r) dedup shuffle. Cosines are
-    # bit-identical to the 'native' fold (see _grouped_cosine_pairs), so
-    # both kernel modes share the grouped path. Hot buckets (> block_cap)
-    # keep the salted candidate_pairs path with the per-pair kernels.
-    small, hot, has_hot = _split_blocks_by_cap(blocks, census, cfg.block_cap)
-    members = small.join(base, "row_id").withColumn("_n", norm(F.col("vec")))
-    out = _grouped_cosine_pairs(members, threshold)
-    if not has_hot:
-        return out
-    pairs = candidate_pairs(hot, cfg, census=census)
-    if kernel == "native":
-        vl = base.select(F.col("row_id").alias("id_l"), F.col("vec").alias("v_l"))
-        vr = base.select(F.col("row_id").alias("id_r"), F.col("vec").alias("v_r"))
-        hot_out = (
-            pairs.join(vl, "id_l").join(vr, "id_r")
-            .select("id_l", "id_r",
-                    cosine_sim(F.col("v_l"), F.col("v_r")).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
-        return out.unionByName(hot_out)
-    from entitylinking_spark.operators.similarity import _dot_arrow
-
-    vl = base.select(
-        F.col("row_id").alias("id_l"), F.col("vec").alias("v_l")
-    ).withColumn("_nl", norm(F.col("v_l")))
-    vr = base.select(
-        F.col("row_id").alias("id_r"), F.col("vec").alias("v_r")
-    ).withColumn("_nr", norm(F.col("v_r")))
-    denom = F.col("_nl") * F.col("_nr")
-    hot_out = (
-        pairs.join(vl, "id_l").join(vr, "id_r")
-        .withColumn("_dot", _dot_arrow(F.col("v_l"), F.col("v_r")))
-        .select(
-            "id_l", "id_r",
-            F.when(denom == 0, F.lit(0.0))
-            .otherwise(F.col("_dot") / denom).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    return out.unionByName(hot_out)
-
-
-def _grouped_cosine_pairs(members: DataFrame, threshold: float) -> DataFrame:
-    """All-pairs cosine over SMALL blocks (size <= block_cap) as ONE
-    grouped numpy kernel per block, emitting only pairs with cosine >=
-    threshold — (id_l, id_r, cosine) with id_l < id_r in UTF8-byte order,
-    exactly the orientation candidate_pairs' string comparison produces.
-
-    Round 6: the candidate_pairs -> join(vec_l) -> join(vec_r) -> per-pair
-    kernel chain materialized every within-block pair as a row carrying
-    BOTH vectors (at sf1.0's semdedup that is ~30M pair rows x ~1 KB
-    through two shuffles plus the (id_l, id_r) dedup shuffle). For a block
-    that fits one task there is no reason to materialize pairs at all:
-    group the members, compute the block's cosine matrix in numpy, emit
-    the surviving edges (guide §2.3/§4.2). Pair SET and cosine VALUES are
-    unchanged: every unordered within-block pair is enumerated exactly
-    once (rows live in exactly one block in the semdedup/near-dup
-    blockings), and the dot is `similarity._jvm_exact_dots` — bit-identical
-    to the JVM fold `cosine_sim` evaluates per pair. Blocks larger than
-    block_cap keep the salted candidate_pairs path (task-size bound).
-
-    members: (block_key, row_id, vec, _n) with _n = JVM norm per row.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from entitylinking_spark.operators.similarity import (
-        _id_order_key,
-        _jvm_exact_dots,
-        _stack_vecs,
-    )
-
-    out_schema = T.StructType([
-        T.StructField("id_l", T.StringType()),
-        T.StructField("id_r", T.StringType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def edges(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_l": [], "id_r": [], "cosine": []})
-        rid = pdf["row_id"].to_numpy()
-        order = np.argsort(_id_order_key(rid), kind="stable")
-        rid = rid[order]
-        V = _stack_vecs(pdf["vec"].to_numpy()[order])
-        nn = pdf["_n"].to_numpy().astype(np.float64, copy=False)[order]
-        dots = _jvm_exact_dots(V, V)
-        denom = nn[:, None] * nn[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom == 0.0, 0.0, dots / denom)
-        iu, ju = np.triu_indices(n, k=1)
-        cu = cos[iu, ju]
-        keep = cu >= threshold
-        return pd.DataFrame({
-            "id_l": rid[iu[keep]],
-            "id_r": rid[ju[keep]],
-            "cosine": cu[keep],
-        })
-
-    return members.groupBy("block_key").applyInPandas(edges, out_schema)
-
-
-def _split_blocks_by_cap(blocks: DataFrame, census: DataFrame,
-                         cap: int) -> tuple[DataFrame, DataFrame, bool]:
-    """(small_blocks, hot_blocks, has_hot): blocks of size (1, cap] go to
-    the grouped all-pairs kernel; blocks above cap keep the salted
-    candidate_pairs path. has_hot is decided by one tiny census probe so
-    the hot branch's plan is only built when hot blocks exist."""
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
-    sized = blocks.join(census, "block_key")
-    small = sized.filter(
-        (F.col("block_size") > 1) & (F.col("block_size") <= cap)
-    ).select("block_key", "row_id")
-    hot = sized.filter(F.col("block_size") > cap).select("block_key", "row_id")
-    has_hot = census.filter(F.col("block_size") > cap).limit(1).count() > 0
-    return small, hot, has_hot
-
-
-def _cosine_edges(pairs: DataFrame, base: DataFrame, threshold: float,
-                  kernel: str) -> DataFrame:
-    """(id_l, id_r) pairs with cosine >= threshold over base(row_id, vec).
-
-    kernel='native' is the JVM fold (bit-exact sequential sum — the
-    DuckDB oracle twin); kernel='arrow' precomputes per-ROW norms before
-    the join and runs the per-PAIR dot as one BLAS einsum per batch
-    (similarity._dot_arrow) — the throughput path: Catalyst higher-order
-    functions are interpreted per element, measured ~4x at ~1M pairs.
-    Decisions are threshold comparisons on values equal to ~1e-15, so
-    both kernels agree except exactly AT the cut — pick thresholds away
-    from data (every caller here does) and the choice is decision-free.
-    """
-    from entitylinking_spark.operators.similarity import (
-        _dot_arrow,
-        cosine_sim,
-        norm,
-    )
-
-    if kernel not in ("native", "arrow"):
-        raise ValueError(f"unknown kernel {kernel!r}")
-    if kernel == "native":
-        vl = base.select(F.col("row_id").alias("id_l"), F.col("vec").alias("v_l"))
-        vr = base.select(F.col("row_id").alias("id_r"), F.col("vec").alias("v_r"))
-        return (
-            pairs.join(vl, "id_l").join(vr, "id_r")
-            .filter(cosine_sim(F.col("v_l"), F.col("v_r")) >= threshold)
-            .select("id_l", "id_r")
-        )
-    vl = base.select(
-        F.col("row_id").alias("id_l"), F.col("vec").alias("v_l")
-    ).withColumn("_nl", norm(F.col("v_l")))
-    vr = base.select(
-        F.col("row_id").alias("id_r"), F.col("vec").alias("v_r")
-    ).withColumn("_nr", norm(F.col("v_r")))
-    denom = F.col("_nl") * F.col("_nr")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        F.col("_dot") / denom
-    )
-    return (
-        pairs.join(vl, "id_l").join(vr, "id_r")
-        .withColumn("_dot", _dot_arrow(F.col("v_l"), F.col("v_r")))
-        .filter(cos >= threshold)
-        .select("id_l", "id_r")
-    )
+    return blocked_pairs(blocks, census, d.select("row_id", "vec"),
+                         block_cap, skip_block_threshold, threshold)
 
 
 def semdedup(embeddings: DataFrame, eps: float = 0.9,
@@ -545,8 +370,8 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
 
     Shape: assign every vector to its nearest k-means cell (one Arrow
     matmul per batch, `ivf.make_cell_dist_udf` — exact integer arithmetic
-    on the 2**12-quantized grid), generate candidate pairs ONLY within a
-    cell via the skew-salted `candidate_pairs` machinery, keep edges with
+    on the 2**12-quantized grid), score pairs ONLY within a cell with the
+    grouped kernel `vecblock.blocked_pairs`, keep edges with
     cosine >= eps, close them transitively with `connected_components`
     (edges never cross cells, so a component lives inside one cell), and
     pick one representative per component:
@@ -563,22 +388,22 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
     bit-for-bit (`semdedup_docs` driver query).
 
     Scale: cells are data-adaptive (auto n_cells ≈ √N) so E[cell] ≈ √N;
-    the within-cell pair join is triangle-salted with per-task bound
-    ≈ 2·cell_cap, and a degenerate mega-cell (> skip threshold, default
-    64·cell_cap) is skipped like `embedding_near_dup_pairs` skips mass-
-    collision buckets. Centroid training reads a bounded sample; the
+    a hot cell is triangle-salted with per-group bound ≈ 2·cell_cap, and
+    a degenerate mega-cell (> skip threshold, default 64·cell_cap) is
+    skipped like `embedding_near_dup_pairs` skips mass-collision buckets. Centroid training reads a bounded sample; the
     rep argmax is ONE struct-min aggregation (no window over a hot
-    cluster). The input plan is scanned up to 4x (fit sample, assignment,
-    both pair sides) — persist `embeddings` first when it is a derived
-    plan rather than a table scan. Returns (row_id, cell, cdist,
-    cluster_id, rep_id, is_kept).
+    cluster). The input plan is scanned up to 3x (fit sample, assignment,
+    vectors) — persist `embeddings` first when it is a derived plan
+    rather than a table scan. Returns (row_id, cell, cdist, cluster_id,
+    rep_id, is_kept). `kernel` is validated and otherwise ignored: both
+    'native' and 'arrow' take the one grouped kernel.
     """
     from entitylinking_spark.operators.ivf import (
         auto_n_cells,
         fit_centroids,
         make_cell_dist_udf,
     )
-    from entitylinking_spark.operators.similarity import cosine_sim
+    from entitylinking_spark.operators.vecblock import blocked_pairs
 
     if keep not in ("far", "near", "min_id"):
         raise ValueError(f"unknown keep policy {keep!r}")
@@ -597,8 +422,8 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
     base = embeddings.select(
         F.col(id_col).cast("string").alias("row_id"), F.col(vec_col).alias("vec")
     )
-    # materialize the slim assignment ONCE: it feeds the pair branches AND
-    # the rep policy, and an unpersisted plan would re-run the Arrow matmul
+    # materialize the slim assignment ONCE: it feeds the census, the
+    # kernel AND the rep policy, and an unpersisted plan would re-run the Arrow matmul
     # per branch (the embedding_near_dup_pairs lesson).
     keyed = (
         base.withColumn("_a", probe(F.col("vec")))
@@ -609,12 +434,6 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
     blocks = keyed.select(
         F.col("cell").cast("string").alias("block_key"), "row_id"
     )
-    cfg = ERConfig(block_cap=cell_cap, skip_block_threshold=skip_block_threshold)
-    from entitylinking_spark.operators.blocking import block_census
-    from entitylinking_spark.operators.similarity import norm
-
-    # census always runs now: it drives the small/hot cell split (below)
-    # as well as the metrics report; cell-count sized, one tiny job
     census = block_census(blocks).localCheckpoint(eager=True)
     if metrics is not None:
         metrics.record(
@@ -622,25 +441,10 @@ def semdedup(embeddings: DataFrame, eps: float = 0.9,
             skip_block_threshold=skip_block_threshold,
             **metrics.block_stats(census, cell_cap, skip_block_threshold),
         )
-    # Round 6 (guide §2.3/§4.2): cells that fit one task (size <= cell_cap)
-    # — under auto_n_cells that is every non-degenerate cell — are scored
-    # as one grouped numpy kernel per cell instead of materializing every
-    # within-cell pair with both vectors through candidate_pairs + two
-    # joins (~30M x ~1 KB pair rows at the sf1.0 bench, 90% of its 378 s).
-    # Edge set and cosine decisions are unchanged (_grouped_cosine_pairs
-    # note); degenerate hot cells keep the salted candidate_pairs path.
-    small, hot, has_hot = _split_blocks_by_cap(blocks, census, cell_cap)
-    members = small.join(base, "row_id").withColumn("_n", norm(F.col("vec")))
-    edges = _grouped_cosine_pairs(members, eps).select(
+    edges = blocked_pairs(blocks, census, base, cell_cap,
+                          skip_block_threshold, eps).select(
         F.col("id_l").alias("src"), F.col("id_r").alias("dst")
     )
-    if has_hot:
-        pairs = candidate_pairs(hot, cfg, census=census)
-        edges = edges.unionByName(
-            _cosine_edges(pairs, base, eps, kernel).select(
-                F.col("id_l").alias("src"), F.col("id_r").alias("dst")
-            )
-        )
     clusters = connected_components(edges, all_ids=keyed.select("row_id"))
     assigned = clusters.join(keyed, "row_id")
     if keep == "min_id":

@@ -15,9 +15,10 @@ Spark mapping (no index structure, just relational ops):
   assign     one Arrow-batched matmul per batch tags every corpus row with
              its nearest-centroid cell id; queries get their `nprobe`
              nearest cells (an exploded array)
-  join       cell equi-join, skew-salted by `similarity.salt_hot_blocks`
-             (a natural cluster in the data IS a hot cell)
-  score+k    exact cosine inside probed cells, per-query rank window
+  score+k    `vecblock.blocked_topk`: one cogrouped numpy kernel per
+             (cell, salt) block, exact cosine inside probed cells, hot
+             cells salted (a natural cluster in the data IS a hot cell),
+             per-query rank window
 
 Cross-engine exactness (the relhash.py / srp integer pattern): centroids
 and vectors are floor-quantized by 2**12 — float32 inputs scale by a power
@@ -42,10 +43,11 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from .similarity import _SRP_QUANT, _stack_vecs, norm, salt_hot_blocks
+from .similarity import _SRP_QUANT
+from .vecblock import _stack_vecs, blocked_topk
 
 _QUANT = _SRP_QUANT  # 2**12: exact scaling of float32/64 in double
 
@@ -183,7 +185,6 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
              cell_cap: int = 2_000, max_salt: int = 64,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "query_id", qvec_col: str = "embedding",
-             kernel: str = "native",
              corpus_count: int | None = None, metrics=None) -> DataFrame:
     """Corpus-scale IVF top-k: cell equi-join, skew-salted.
 
@@ -208,42 +209,14 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     assign = make_cell_probe_udf(centroids, 1)
     corp = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("cell", F.element_at(assign(F.col("_vec")), 1)).withColumn(
-        "_n", norm(F.col("_vec"))
-    )
-    corp, hot = salt_hot_blocks(
-        corp, "cell", cell_cap, max_salt, metrics=metrics,
-        metric_name="ivf_cell_census", n_cells=n_cells, cell_cap=cell_cap,
-    )
-
+    ).withColumn("cell", F.element_at(assign(F.col("_vec")), 1))
     # the probe kernel runs ONCE into its own ArrowEvalPython node; the
     # explode fans each query to its nprobe cells
     probe = make_cell_probe_udf(centroids, nprobe)
     q = queries.select(
         F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("_qvec")
-    ).withColumn("cell", F.explode(probe(F.col("_qvec")))).withColumn(
-        "_qn", norm(F.col("_qvec"))
+    ).withColumn("cell", F.explode(probe(F.col("_qvec"))))
+    return blocked_topk(
+        corp, q, "cell", k, cell_cap, max_salt, metrics=metrics,
+        metric_name="ivf_cell_census", n_cells=n_cells, cell_cap=cell_cap,
     )
-    q = q.join(F.broadcast(hot), "cell", "left").withColumn(
-        "n_salt", F.coalesce(F.col("n_salt"), F.lit(1))
-    ).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1))
-    )
-
-    # Round 6: same rewrite as lsh_topk_shuffle — the cell equi-join used
-    # to materialize every (query, corpus) pair row with both vectors and
-    # evaluate the dot per pair (25M+ pair rows at sf1.0, 96% of the
-    # query's 219 s). One cogrouped numpy kernel per (cell, salt) block
-    # now computes bit-identical cosines and emits only per-group top-k;
-    # `kernel` is kept for API stability (both modes take this path).
-    # probed cells are disjoint (each corpus row is in exactly one cell):
-    # no (query_id, vec_id) dedup needed before ranking
-    from .similarity import _cogrouped_topk
-
-    cand = _cogrouped_topk(
-        corp.select("cell", "salt", "vec_id", "_vec", "_n"),
-        q.select("cell", "salt", "query_id", "_qvec", "_qn"),
-        ["cell", "salt"], k,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -1,16 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-Replaces the reference's embedding top-k probe
-(/root/reference/Sparkle/database.py:165-183: np.dot + argsort per query;
-/root/reference/e2e/entity_database.py:306-324) with distributed variants:
+Replaces the reference's embedding top-k probe (Sparkle `database.py`:
+np.dot + argsort per query) with distributed variants:
 
   brute_force_topk    exact cosine top-k via JVM-native dot products +
                       a rank window — the correctness baseline
-  lsh_topk            random-hyperplane LSH buckets bound the join
-                      (the 100TB scale path; approximate)
+  lsh_topk_shuffle    corpus-scale approximate top-k: integer-SRP buckets,
+                      multi-probe, blocks scored by `vecblock.blocked_topk`
+  hard_negatives      ranked complement of a dedup clustering
 
-Dot products use F.zip_with/F.aggregate (whole-stage codegen, no Python);
-the hyperplane projections are one Arrow-batched matmul per partition.
+Dot products and norms are the JVM folds of `vecblock` (no Python); the
+SRP bucket projections are one Arrow-batched matmul per batch.
 """
 
 from __future__ import annotations
@@ -20,26 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v.cast("double"),
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v.cast("double")
-        )
-    )
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    denom = norm(a) * norm(b)
-    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
+from .vecblock import _stack_vecs, blocked_topk, dot, norm
 
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
@@ -55,8 +36,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         queries.select(F.col(qid_col).alias("_qid"), F.col(qvec_col).alias("_qvec"))
         .withColumn("_qn", norm(F.col("_qvec")))
     )
-    # norms once per row, dot once per pair (same arithmetic as cosine_sim;
-    # higher-order fns are interpreted, so per-pair norm recompute is ~3x)
+    # norms once per row, dot once per pair (higher-order fns are
+    # interpreted, so per-pair norm recompute is ~3x)
     denom = F.col("_n") * F.col("_qn")
     scored = embeddings.withColumn("_n", norm(F.col(vec_col))).crossJoin(q).select(
         F.col("_qid").alias("query_id"),
@@ -64,55 +45,6 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         F.when(denom == 0, F.lit(0.0))
         .otherwise(dot(F.col(vec_col), F.col("_qvec")) / denom)
         .alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-# Fixed random hyperplanes (seeded) shared by corpus and queries.
-_HP_RNG = np.random.RandomState(1234)
-_HP_MAX_PLANES = 32
-_HP_MAX_DIM = 4096
-_HYPERPLANES = _HP_RNG.normal(size=(_HP_MAX_PLANES, _HP_MAX_DIM))
-
-
-def hyperplane_bucket(vec_col: Column, n_planes: int = 8) -> Column:
-    """Sign-bit bucket id from fixed random hyperplanes (SRP-LSH for cosine).
-
-    Arrow-batched: one (batch, dim) x (dim, planes) matmul per batch.
-    """
-    planes = _HYPERPLANES[:n_planes]
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int32")
-        mat = _stack_vecs(vecs.to_numpy()).astype(np.float64, copy=False)
-        proj = mat @ planes[:, : mat.shape[1]].T
-        bits = (proj > 0).astype(np.int32)
-        out = np.zeros(len(vecs), dtype=np.int32)
-        for j in range(bits.shape[1]):
-            out |= bits[:, j] << j
-        return pd.Series(out)
-
-    return bucket(vec_col)
-
-
-def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-             n_planes: int = 8, id_col: str = "vec_id", vec_col: str = "embedding",
-             qid_col: str = "query_id", qvec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k for a SMALL query set: only score corpus vectors in
-    the query's SRP bucket, query side broadcast. For a query side that is
-    itself corpus-scale (the reference probes its index once per mention —
-    /root/reference/Sparkle/database.py:165-183), use lsh_topk_shuffle."""
-    corp = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("bucket", hyperplane_bucket(F.col("_vec"), n_planes))
-    q = queries.select(
-        F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("_qvec")
-    ).withColumn("bucket", hyperplane_bucket(F.col("_qvec"), n_planes))
-    scored = corp.join(F.broadcast(q), "bucket").select(
-        "query_id", "vec_id", cosine_sim(F.col("_vec"), F.col("_qvec")).alias("cosine")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -215,143 +147,6 @@ def _probe_buckets(bucket: Column, n_planes: int, probe_bits: int) -> Column:
     return F.array_distinct(F.array(*probes))
 
 
-@F.pandas_udf(T.DoubleType())
-def _dot_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched dot product: one BLAS einsum per batch. The scale
-    kernel for pair-heavy cosine work — Catalyst higher-order functions
-    are interpreted per element, measured ~4x slower at ~1M pairs."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    ma = _stack_vecs(a.to_numpy()).astype(np.float64, copy=False)
-    mb = _stack_vecs(b.to_numpy()).astype(np.float64, copy=False)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-def _stack_vecs(cells) -> np.ndarray:
-    """(n, dim) matrix from a pandas object column of Arrow list values,
-    PRESERVING the element dtype (float32 stays float32) so kernel
-    arithmetic can reproduce the JVM's per-element rounding exactly."""
-    first = cells[0]
-    if isinstance(first, np.ndarray):
-        return np.stack(cells)
-    return np.array(list(cells), dtype=np.float64)
-
-
-def _jvm_exact_dots(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(nq, d) x (nc, d) -> (nq, nc) float64 dot products BIT-IDENTICAL to
-    the interpreted JVM fold `dot()`: each per-element product is computed
-    in the INPUT element type (float32 inputs round every product to
-    float32, exactly like Spark's float*float), then accumulated into a
-    float64 in ascending dimension order (the fold's sequential sum; a
-    BLAS matmul/einsum would reassociate the sum and drift in the last
-    ulp). Vectorized across all pairs, so it runs at numpy speed — the
-    guide-§4 replacement for evaluating the fold once per candidate pair
-    — while changing NOTHING about the computed values."""
-    if Q.dtype != C.dtype:
-        # mixed float32/float64 sides: Spark promotes both to double
-        # before multiplying (float32 -> float64 is exact)
-        Q = Q.astype(np.float64)
-        C = C.astype(np.float64)
-    nq, d = Q.shape
-    nc = C.shape[0]
-    acc = np.zeros((nq, nc), dtype=np.float64)
-    if d == 0 or nq == 0 or nc == 0:
-        return acc
-    prod = np.empty((nq, nc), dtype=Q.dtype)
-    for j in range(d):
-        np.multiply(Q[:, j, None], C[None, :, j], out=prod)
-        acc += prod
-    return acc
-
-
-def _id_order_key(ids: np.ndarray) -> np.ndarray:
-    """Sort key matching Spark's ordering for the id column: UTF8 byte
-    order for strings (Spark compares UTF8String bytes; Python compares
-    code points — encode so both agree beyond ASCII), natural order for
-    numerics."""
-    if ids.dtype == object:
-        return np.array(
-            [s.encode("utf-8") if isinstance(s, str) else s for s in ids],
-            dtype=object,
-        )
-    return ids
-
-
-def _cogrouped_topk(corp: DataFrame, q: DataFrame, keys: list[str],
-                    k: int) -> DataFrame:
-    """Per-block candidate scorer for the shuffled ANN joins: replaces
-      corp.join(q, keys).select(cosine per pair)  ->  full rank window
-    with ONE cogrouped Arrow kernel per (bucket/cell, salt) group that
-    scores the group's query x corpus block as a matrix and emits only
-    each query's per-group top-k (guide §2.3 "shuffle keys and metadata,
-    not payloads" + §4.2 "hand whole batches to vectorized native code").
-
-    Wins over the join form, measured at sf1.0 (20k x 20k, 256 buckets):
-      * the pair rows (14M+ of them, each carrying BOTH ~512 B vectors)
-        are never materialized — the join projected them all through an
-        interpreted higher-order fold;
-      * the rank-window Exchange shrinks from every scored pair to at
-        most (probes x k) rows per query.
-
-    Correctness: cosine = when(denom == 0, 0.0, dot/denom) with dot from
-    `_jvm_exact_dots` — bit-identical to the JVM fold the join projected —
-    and per-group selection uses the window's exact order (cosine DESC,
-    id ASC by Spark semantics). A row of the true global top-k ranks <= k
-    inside its own group (its group candidates are a subset of its global
-    candidates), so the union of per-group top-k lists contains the global
-    top-k and the downstream window returns identical rows and ranks.
-
-    corp: (*keys, vec_id, _vec, _n); q: (*keys, query_id, _qvec, _qn).
-    Returns (query_id, vec_id, cosine) candidates.
-    """
-    out_schema = T.StructType([
-        T.StructField("query_id", q.schema["query_id"].dataType),
-        T.StructField("vec_id", corp.schema["vec_id"].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def score(cdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cdf) == 0 or len(qdf) == 0:
-            return pd.DataFrame({"query_id": [], "vec_id": [], "cosine": []})
-        vid = cdf["vec_id"].to_numpy()
-        order = np.argsort(_id_order_key(vid), kind="stable")
-        vid = vid[order]
-        C = _stack_vecs(cdf["_vec"].to_numpy()[order])
-        cn = cdf["_n"].to_numpy().astype(np.float64, copy=False)[order]
-        nc = len(vid)
-        kk = min(k, nc)
-        qid_all = qdf["query_id"].to_numpy()
-        qn_all = qdf["_qn"].to_numpy().astype(np.float64, copy=False)
-        qvec_all = qdf["_qvec"].to_numpy()
-        qids_out, vids_out, cos_out = [], [], []
-        # bound the (chunk x nc) score matrix to ~16 MB however large the
-        # group's query fan-in is
-        chunk = max(1, int(2_000_000 // max(nc, 1)))
-        for s in range(0, len(qid_all), chunk):
-            Qm = _stack_vecs(qvec_all[s:s + chunk])
-            dots = _jvm_exact_dots(Qm, C)
-            denom = qn_all[s:s + chunk, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0.0, 0.0, dots / denom)
-            # stable argsort of -cosine over corpus pre-sorted by id ==
-            # the window's (cosine DESC, id ASC) order
-            sel = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-            qids_out.append(np.repeat(qid_all[s:s + chunk], kk))
-            vids_out.append(vid[sel].ravel())
-            cos_out.append(np.take_along_axis(cos, sel, axis=1).ravel())
-        return pd.DataFrame({
-            "query_id": np.concatenate(qids_out),
-            "vec_id": np.concatenate(vids_out),
-            "cosine": np.concatenate(cos_out),
-        })
-
-    return (
-        corp.groupBy(*keys)
-        .cogroup(q.groupBy(*keys))
-        .applyInPandas(score, out_schema)
-    )
-
-
 def auto_n_planes(corpus_count: int, bucket_cap: int = 2_000,
                   lo: int = 4, hi: int = 24) -> int:
     """Plane count targeting E[bucket size] ~= bucket_cap: the number of
@@ -368,71 +163,18 @@ def auto_n_planes(corpus_count: int, bucket_cap: int = 2_000,
     return max(lo, min(hi, int(math.ceil(math.log2(need))) if need > 1 else lo))
 
 
-def salt_hot_blocks(corp: DataFrame, key_col: str, cap: int, max_salt: int,
-                    salt_id_col: str = "vec_id", metrics=None,
-                    metric_name: str = "block_census", **metric_tags):
-    """Census + salt the skew tail of a blocked corpus frame; shared by
-    the SRP-bucket (lsh_topk_shuffle) and IVF-cell (ivf.ivf_topk) joins.
-
-    One pass censuses block sizes (persisted so a metrics collect does not
-    recompute it — ADVICE r4); only HOT blocks (size > cap) are collected
-    and re-emitted as a broadcast literal frame, so the broadcast is
-    O(skewed blocks) at any corpus size. Blocks at or under cap default to
-    n_salt=1 through the left join + coalesce. A block of size S gets
-    min(ceil(S/cap), max_salt) salt groups; corpus rows land in ONE group
-    (hash of `salt_id_col`) — the probe side replicates across groups, so
-    salting changes task boundaries, never results.
-
-    Returns (corp with n_salt+salt columns, hot broadcast frame). Census
-    stats (n_buckets / max_bucket / mean_bucket / n_hot / max_n_salt) plus
-    `metric_tags` are recorded under `metric_name` when `metrics` is set.
-    """
-    key_type = corp.schema[key_col].dataType.simpleString()
-    census = corp.groupBy(key_col).agg(F.count("*").alias("_bsize")).persist()
-    if metrics is not None:
-        stats = census.agg(
-            F.count("*").alias("n_buckets"),
-            F.max("_bsize").alias("max_bucket"),
-            F.avg("_bsize").alias("mean_bucket"),
-            F.sum((F.col("_bsize") > cap).cast("long")).alias("n_hot"),
-            F.max(F.least(F.ceil(F.col("_bsize") / cap),
-                          F.lit(max_salt))).alias("max_n_salt"),
-        ).collect()[0].asDict()
-        metrics.record(
-            metric_name, max_salt=max_salt, **metric_tags,
-            **{kk: (float(v) if v is not None else None) for kk, v in stats.items()},
-        )
-    hot_rows = census.filter(F.col("_bsize") > cap).select(
-        key_col,
-        F.least(F.ceil(F.col("_bsize") / cap).cast("int"),
-                F.lit(max_salt)).alias("n_salt"),
-    ).collect()
-    census.unpersist()
-    hot = corp.sparkSession.createDataFrame(
-        hot_rows, f"{key_col} {key_type}, n_salt int"
-    )
-    corp = corp.join(F.broadcast(hot), key_col, "left").withColumn(
-        "n_salt", F.coalesce(F.col("n_salt"), F.lit(1))
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64(salt_id_col), F.col("n_salt")).cast("int")
-    )
-    return corp, hot
-
-
 def lsh_topk_shuffle(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                      n_planes: int | None = None, probe_bits: int = 1,
                      bucket_cap: int = 2_000, dim: int | None = None,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      qid_col: str = "query_id", qvec_col: str = "embedding",
                      planes: list[list[int]] | None = None,
-                     kernel: str = "native",
                      corpus_count: int | None = None, max_salt: int = 64,
                      metrics=None) -> DataFrame:
     """Corpus-scale approximate top-k: shuffle bucket equi-join, salted.
 
-    The 100 TB path for "every mention queries the index"
-    (/root/reference/Sparkle/database.py:165-183): neither side is
-    broadcast. Corpus vectors hash to one SRP bucket each; queries probe
+    The 100 TB path for "every mention queries the index": neither side
+    is broadcast. Corpus vectors hash to one SRP bucket each; queries probe
     their bucket plus all buckets within `probe_bits` bit flips (recall
     knob). Hot buckets are salted: a bucket of size S gets
     min(ceil(S/cap), max_salt) salt groups, corpus rows land in one group
@@ -475,23 +217,10 @@ def lsh_topk_shuffle(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     n_planes = len(planes)
     dim = len(planes[0]) if planes else dim
 
-    # per-row norms are computed ONCE here, so the per-pair work inside the
-    # join is a single dot product (Catalyst higher-order functions are
-    # interpreted, not codegen'd — recomputing two norms per candidate pair
-    # measured ~3x the whole query cost). dot/(n_l*n_r) keeps the exact
-    # arithmetic of cosine_sim, so the DuckDB oracle parity is unchanged.
     bucket_udf = make_srp_bucket_udf(planes)
     corp = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("bucket", bucket_udf(F.col("_vec"))).withColumn(
-        "_n", norm(F.col("_vec"))
-    )
-    corp, hot = salt_hot_blocks(
-        corp, "bucket", bucket_cap, max_salt, metrics=metrics,
-        metric_name="ann_bucket_census",
-        n_planes=n_planes, bucket_cap=bucket_cap,
-    )
-
+    ).withColumn("bucket", bucket_udf(F.col("_vec")))
     # the bucket kernel runs ONCE into _b0 (ArrowEvalPython is its own plan
     # node, never inlined into the 9+ probe slots)
     qb = queries.select(
@@ -500,33 +229,12 @@ def lsh_topk_shuffle(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     q = qb.withColumn(
         "bucket",
         F.explode(_probe_buckets(F.col("_b0"), n_planes, probe_bits)),
-    ).drop("_b0").withColumn("_qn", norm(F.col("_qvec")))
-    # probes into cold buckets replicate once (coalesce -> 1); probes into
-    # empty buckets survive to the join and match nothing — results equal
-    q = q.join(F.broadcast(hot), "bucket", "left").withColumn(
-        "n_salt", F.coalesce(F.col("n_salt"), F.lit(1))
-    ).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1))
+    ).drop("_b0")
+    return blocked_topk(
+        corp, q, "bucket", k, bucket_cap, max_salt, metrics=metrics,
+        metric_name="ann_bucket_census",
+        n_planes=n_planes, bucket_cap=bucket_cap,
     )
-
-    # Round 6: the bucket equi-join used to materialize EVERY candidate
-    # pair (each row carrying both vectors) and run the dot product as an
-    # interpreted JVM fold per pair ('native') or a per-pair Arrow UDF
-    # ('arrow') — at sf1.0 that is 14M+ pair rows and was 92% of the
-    # query's 161 s. _cogrouped_topk scores each (bucket, salt) block as
-    # one numpy matrix with arithmetic bit-identical to the 'native' fold
-    # and emits only per-group top-k candidates, so both kernel modes now
-    # return byte-identical results through the same grouped path (the
-    # `kernel` parameter is kept for API stability).
-    # multi-probe buckets are disjoint (each corpus vector hashes to exactly
-    # one bucket), so no (query_id, vec_id) dedup is needed before ranking
-    cand = _cogrouped_topk(
-        corp.select("bucket", "salt", "vec_id", "_vec", "_n"),
-        q.select("bucket", "salt", "query_id", "_qvec", "_qn"),
-        ["bucket", "salt"], k,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ann_recall_report(embeddings: DataFrame, queries: DataFrame, k: int = 10,

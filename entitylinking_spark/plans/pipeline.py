@@ -227,7 +227,7 @@ def resolve(
         def on_iter(it: int, n_edges: int):
             if collect_metrics:
                 m.record(f"cc_iter_{it}", n_edges=n_edges)
-        # edges were already distinct-ed above — skip CC's initial dedup
+        # edges are distinct by construction (above) — skip CC's dedup
         return connected_components(
             edges, all_ids=keyed.select("row_id"), on_iteration=on_iter,
             assume_distinct=True,

@@ -127,3 +127,23 @@ def test_driver_fast_path_numeric_ids(spark):
     got = {r["row_id"]: r["cluster_id"]
            for r in connected_components(e).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_null_endpoint_dropped_on_both_paths(spark):
+    """An edge with a null endpoint connects nothing. With assume_distinct
+    the driver union-find and the star loop must both drop it, as the
+    `src != dst` filter does in the default mode."""
+    e = spark.createDataFrame(
+        [("a", "b"), ("c", None), ("d", "e")], "src string, dst string"
+    )
+    ids = spark.createDataFrame([(i,) for i in "abcde"], ["row_id"])
+
+    def labels(**kw):
+        got = connected_components(e, all_ids=ids, assume_distinct=True, **kw)
+        return {r["row_id"]: r["cluster_id"] for r in got.collect()}
+
+    want = {"a": "a", "b": "a", "c": "c", "d": "d", "e": "d"}
+    assert labels() == labels(driver_max_edges=0) == want
+    default = {r["row_id"]: r["cluster_id"]
+               for r in connected_components(e, all_ids=ids).collect()}
+    assert default == want

@@ -10,7 +10,7 @@ from entitylinking_spark.operators.dedup import (
     embedding_near_dup_pairs,
     ngram_jaccard_pairs,
 )
-from entitylinking_spark.operators.similarity import brute_force_topk, lsh_topk
+from entitylinking_spark.operators.similarity import brute_force_topk, lsh_topk_shuffle
 
 
 def _corpus(spark):
@@ -225,7 +225,7 @@ def test_brute_force_topk_exact(spark):
 def test_lsh_topk_finds_close_neighbor(spark):
     emb = _embeddings(spark)
     q = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], ["query_id", "embedding"])
-    out = lsh_topk(emb, q, k=3, n_planes=4).orderBy("rank").collect()
+    out = lsh_topk_shuffle(emb, q, k=3, n_planes=4).orderBy("rank").collect()
     ids = [r["vec_id"] for r in out]
     assert ids[0] == 1 and 2 in ids  # same bucket as the query
 
@@ -258,24 +258,3 @@ def test_cluster_representatives_policies(spark):
     worst = {r["doc_id"]: r["rep_id"] for r in cluster_representatives(
         assign, feats, "quality", ascending=True).collect()}
     assert worst[1] == 1 and worst[4] == 5
-
-
-def test_near_dup_arrow_kernel_matches_native(spark):
-    import numpy as np
-
-    from entitylinking_spark.operators.dedup import embedding_near_dup_pairs
-
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=(5, 12))
-    rows = []
-    for i in range(40):
-        v = base[i % 5] + rng.normal(scale=0.01, size=12)
-        rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = sorted(map(tuple, embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=3, dim=12).collect()))
-    b = sorted(map(tuple, embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=3, dim=12, kernel="arrow").collect()))
-    # identical pair sets; cosine values equal to float tolerance
-    assert [x[:2] for x in a] == [x[:2] for x in b]
-    assert all(abs(x[2] - y[2]) < 1e-12 for x, y in zip(a, b))

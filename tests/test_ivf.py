@@ -106,23 +106,6 @@ def test_census_metrics_and_auto_sizing(clustered):
     assert auto_n_cells(0) == 1
 
 
-def test_arrow_kernel_matches_native(clustered):
-    """kernel='arrow' (batched BLAS einsum) selects the same ranked
-    neighbors as the JVM-fold default; cosines agree to float tolerance
-    (the two differ only in summation order)."""
-    emb, q = clustered
-    cents = seed_centroids(emb, 12)
-    native = ivf_topk(emb, q, k=5, centroids=cents)
-    arrow = ivf_topk(emb, q, k=5, centroids=cents, kernel="arrow")
-    a = {(r["query_id"], r["vec_id"], r["rank"]): r["cosine"]
-         for r in native.collect()}
-    b = {(r["query_id"], r["vec_id"], r["rank"]): r["cosine"]
-         for r in arrow.collect()}
-    assert a.keys() == b.keys()
-    for key, cos in a.items():
-        assert abs(b[key] - cos) < 1e-9
-
-
 def test_edge_inputs(spark, clustered):
     emb, _ = clustered
     empty_q = spark.createDataFrame([], "query_id long, embedding array<double>")

@@ -1,9 +1,12 @@
-"""Snapshot exact outputs of queries whose internals round 6 rewrites,
-so before/after equivalence is provable bit-for-bit (floats compared by
-raw IEEE bits, not tolerance).
+"""Snapshot exact outputs of the vector-block and dedup operators, so
+before/after equivalence of a refactor is provable bit-for-bit (floats
+compared by raw IEEE bits, not tolerance).
 
 Usage: python tools/snapshot_outputs.py <out.pkl> [sf_dir]
        python tools/snapshot_outputs.py --compare <a.pkl> <b.pkl>
+
+The package is imported from the checkout that holds this file, so copy
+the file into a checkout of the older commit to snapshot that commit.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ def snapshot(out_path: str, sf_dir: str):
     import __spark_entry__ as entry_mod
     from entitylinking_spark.session import get_spark
 
-    spark = get_spark(app_name="snapshot-r06", cores=16)
+    spark = get_spark(app_name="snapshot-outputs")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -55,7 +58,10 @@ def snapshot(out_path: str, sf_dir: str):
         print(f"# {name}: {len(rows)} rows")
 
     # bench-shaped raw-float paths (exercise the float32 kernel arithmetic)
-    from entitylinking_spark.operators.dedup import semdedup
+    from entitylinking_spark.operators.dedup import (
+        embedding_near_dup_pairs,
+        semdedup,
+    )
     from entitylinking_spark.operators.ivf import ivf_topk
     from entitylinking_spark.operators.similarity import lsh_topk_shuffle
 
@@ -67,10 +73,12 @@ def snapshot(out_path: str, sf_dir: str):
          lsh_topk_shuffle(emb, q, k=5, n_planes=4, probe_bits=1, dim=64,
                           bucket_cap=40)),
         ("bench_ivf_f32", ivf_topk(emb, q, k=10, n_cells=32, nprobe=2)),
-        ("bench_semdedup_arrow",
-         semdedup(emb, eps=0.9, corpus_count=None, kernel="arrow")),
-        ("bench_semdedup_native",
-         semdedup(emb, eps=0.9, corpus_count=None, kernel="native")),
+        ("bench_semdedup", semdedup(emb, eps=0.9)),
+        # tiny caps put every block on the salted path of the kernels
+        ("bench_near_dup_salted",
+         embedding_near_dup_pairs(emb, threshold=0.3, block_cap=8,
+                                  skip_block_threshold=2**31 - 1)),
+        ("bench_semdedup_salted", semdedup(emb, eps=0.3, cell_cap=8)),
     ]:
         rows = sorted(tuple(canon(v) for v in r) for r in df.collect())
         results[name] = (tuple(df.columns), rows)
